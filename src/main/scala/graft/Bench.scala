@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
   *    BENCH_r05 skipped 10 streaming queries under the old
   *    reps-first order), then remaining budget funds extra reps for
   *    median stability, batch queries first;
-  *  - streaming entries (s*) default to 1 rep: their variance is the
+  *  - streaming entries (s*) run 1 rep: their variance is the
   *    micro-batch harness floor (state-store setup + drain), not plan
   *    quality, so median-of-3 buys nothing there (BENCH_NOTES.md).
   */
@@ -83,8 +83,7 @@ object Bench {
 
   /** Validated env-int parse: a malformed override must degrade to the
     * default with a visible bench_note, not crash the bench after
-    * JVM+Spark startup or silently corrupt stream confs (either costs
-    * the round its artifact). */
+    * JVM+Spark startup (that costs the round its artifact). */
   private def envInt(name: String, default: Int, min: Int = 1): Int =
     sys.env.get(name) match {
       case None => default
@@ -108,49 +107,19 @@ object Bench {
     def elapsed: Double = (System.nanoTime() - t0Wall) / 1e9
     val budget = envDouble("SPARK_GRAFT_TIME_BUDGET", 240)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = envInt("SPARK_GRAFT_CPUS", 4).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NOTE (r8): bytes-based AQE coalescing (parallelismFirst=false,
-      // 8 MB advisory) was measured here and REJECTED: an 8-entry
-      // subset improved 14%, but the full suite regressed (d-family
-      // 96 s → 113 s) — the doc-pipeline operators are CPU-per-byte
-      // heavy (hashing, shingles, array algebra), so byte-count
-      // coalescing serializes exactly the stages that need the cores.
-      // Keeping partitions = cores; details in BENCH_NOTES.
-      // every entrypoint pins UTC: Tables' TIMESTAMP_NTZ→Timestamp cast
-      // is session-timezone-dependent, so an unpinned bench session
-      // would read shifted instants on a non-UTC host
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE off FOR THE BENCH SESSION ONLY (Verify and the specs keep
-      // the default; the library never touches the flag — a 100 TB
-      // deployment wants AQE's skew/coalesce machinery). At bench scale
-      // (4 partitions, sf0.1) AQE buys nothing the static planner
-      // doesn't already do — r8 measured its bytes-coalescing configs
-      // as net-negative here — while costing per-stage re-plan +
-      // re-codegen: the sf0.001 warmup compiles the STATIC plan's
-      // generated classes, and AQE's runtime re-plans at sf0.1 compile
-      // fresh ones per entry, so the warmup stops covering codegen.
-      // Measured (full 185-entry driver-config draws, same day):
-      // quiet-phase best 175.5 s AQE-off vs 188.2 s AQE-on; slow-phase
-      // within-pair 212.7 vs 214.6; gc_sec 0.97 vs 2.0-2.7.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Streaming-drain floor controls (the bench's s-family cost is
-    // state-store commits × micro-batches — harness, not plan): run the
-    // MINIMUM drain that still exercises every cross-batch merge path
-    // (2 chunks; results are chunk-count-invariant by the parity
-    // contract), fewer state partitions, and a halved rate-limit drain.
-    // Verify and the specs keep the defaults (4 chunks / 8 parts).
-    spark.conf.set("graft.stream.chunks",
-      envInt("SPARK_GRAFT_STREAM_CHUNKS", 2).toString)
-    spark.conf.set("graft.stream.parts",
-      envInt("SPARK_GRAFT_STREAM_PARTS", 4).toString)
-    spark.conf.set("graft.stream.batches",
-      envInt("SPARK_GRAFT_STREAM_BATCHES", 4).toString)
+    // GraftSession: cores = SPARK_GRAFT_CPUS, partitions = cores, UTC,
+    // AQE off (its scaladoc carries the measured rationale). NOTE (r8):
+    // bytes-based AQE coalescing (parallelismFirst=false, 8 MB advisory)
+    // was measured here and REJECTED: an 8-entry subset improved 14%,
+    // but the full suite regressed (d-family 96 s → 113 s) — the
+    // doc-pipeline operators are CPU-per-byte heavy (hashing, shingles,
+    // array algebra), so byte-count coalescing serializes exactly the
+    // stages that need the cores. Keeping partitions = cores; details in
+    // BENCH_NOTES. Streaming entries drain at the Streaming defaults
+    // (2 chunks, 4 state partitions, 4 rate-limited batches) — the
+    // minimum drain that still exercises every cross-batch merge path,
+    // and the same drain Verify checks.
+    val spark = GraftSession.build("graft-bench", cores = envInt("SPARK_GRAFT_CPUS", 4))
     // Optional comma-separated subset for targeted local timing.
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
@@ -397,7 +366,8 @@ object Bench {
     // the lower one is closer to true plan cost (a 2-rep entry would
     // otherwise record its WORSE shot).
     val repsBatch = envInt("SPARK_GRAFT_REPS", 3)
-    val repsStream = envInt("SPARK_GRAFT_STREAM_REPS", 1)
+    // streaming entries: one rep (the class doc says why)
+    val repsStream = 1
     // Entries whose FIRST run memoizes a deterministic driver-side
     // artifact for the session (d45: the BPE merge sequence, shared with
     // d47; d46: the Lloyd centroid rounds, shared with d68 — train once,

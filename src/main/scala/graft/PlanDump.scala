@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev main (not part of the contract): dump `.explain("formatted")`
@@ -9,7 +8,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * query's DataFrame against the given data dir and writes the
   * formatted plan WITHOUT executing it — plan shape, join strategy,
   * Exchange count, PushedFilters/ReadSchema are all visible pre-run
-  * (AQE is off in the bench session this mirrors).
+  * (AQE is off in the GraftSession recipe).
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> [sfDir] [q1,q2,...]
   *   suffix: appended as _<suffix>.txt (e.g. "before", "after")
@@ -21,15 +20,8 @@ object PlanDump {
     val suffix = args(1)
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val names = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // mirror the bench session so the dumped plans are the measured ones
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench session's recipe, so the dumped plans are the measured ones
+    val spark = GraftSession.build("graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val sel = SparkEntry.queries.toSeq.sortBy(_._1)

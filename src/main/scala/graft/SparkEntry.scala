@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Full operator registry (SURVEY.md §2). */
-  def registry: Seq[GraftQuery] =
+  lazy val registry: Seq[GraftQuery] =
     Relational.queries ++ Events.queries ++ Docs.queries ++ Streaming.queries
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -15,11 +15,11 @@ object SparkEntry {
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
 }

@@ -1,21 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(_.trim.toIntOption).getOrElse(4).max(1).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_QUERIES=d25_vocab_stats,d26_source_mix limits
     // the dump to a comma-separated subset (same knob as Bench).
@@ -57,27 +48,34 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // The dump loop runs entries CONCURRENTLY by default: correctness
-    // does not need clean per-entry timing (that's Bench's job), every
-    // entry's result is partition/scheduling-invariant by the suite's
-    // own oracle design, and wall time is survival — the round driver
-    // kills Verify on a wall budget, and a ~3x shorter loop turns a
-    // slow-phase kill into a non-event (with oracle_sql.json written
-    // first, a kill already only costs the unfinished tail).
-    // SPARK_GRAFT_VERIFY_THREADS=1 restores the sequential loop with
-    // its per-query cache clear; concurrent mode leaves persisted
-    // intermediates to Spark's LRU storage eviction instead (a clear
-    // from one worker would yank a concurrent entry's cache mid-job).
-    // validated parse: a malformed override must not crash the dump
-    // after JVM+Spark startup (it would zero the round's correctness)
-    val nThreads = sys.env.get("SPARK_GRAFT_VERIFY_THREADS")
-      .flatMap(_.trim.toIntOption).getOrElse(4).max(1)
+    // The dump loop runs entries CONCURRENTLY on Workers threads:
+    // correctness does not need clean per-entry timing (that's Bench's
+    // job), every entry's result is partition/scheduling-invariant by
+    // the suite's own oracle design, and wall time is survival — Verify
+    // may be killed on a wall budget, and a ~3x shorter loop turns a
+    // slow-phase kill into a non-event (with oracle_sql.json
+    // written first, a kill already only costs the unfinished tail).
+    //
+    // Bounded cache accumulation: the suite's entries persist dozens of
+    // anonymous intermediates they never unpersist. A periodic clear
+    // bounds storage growth over the run; it may yank a concurrent
+    // entry's persist mid-job, which only costs that entry a recompute,
+    // and the blast radius is the <= Workers in-flight entries. Two
+    // contracts make the clear safe: (1) NO entry may lean on persist()
+    // for CORRECTNESS — materializations whose recompute could differ
+    // (nondeterminism like spark_partition_id; e26's pid↔offset pairing)
+    // must use localCheckpoint, which this clear cannot touch; (2) the
+    // clear may evict util.RowMemo's deliberately-long-lived over-cap
+    // entry (RowMemo.getOrBuild re-registers it on the next consumer, so
+    // the cost is one recompute, never a permanently-uncached plan). If
+    // the clear cadence ever tightens, re-check both.
+    val Workers = 4
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
+    val processed = new java.util.concurrent.atomic.AtomicInteger(0)
     val it = selected.iterator
-    def nextEntry(): Option[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
+    def nextEntry(): Option[(String, (SparkSession, String) => DataFrame)] =
       it.synchronized { if (it.hasNext) Some(it.next()) else None }
-    def runOne(name: String,
-               fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
+    def runOne(name: String, fn: (SparkSession, String) => DataFrame): Unit = {
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -89,41 +87,18 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    if (nThreads == 1) {
-      selected.foreach { case (name, fn) =>
-        runOne(name, fn)
-        // free any caches a query persisted before the next one runs
-        spark.catalog.clearCache()
-      }
-    } else {
-      // Bounded cache accumulation: the suite's entries persist dozens
-      // of anonymous intermediates they never unpersist (the sequential
-      // loop cleared per entry). A periodic clear bounds storage growth
-      // over the run; it may yank a concurrent entry's persist mid-job,
-      // which only costs that entry a recompute, and the blast radius
-      // is the <= nThreads in-flight entries. Two contracts make the
-      // clear safe: (1) NO entry may lean on persist() for CORRECTNESS
-      // — materializations whose recompute could differ (nondeterminism
-      // like spark_partition_id; e26's pid↔offset pairing) must use
-      // localCheckpoint, which this clear cannot touch; (2) the clear
-      // may evict util.RowMemo's deliberately-long-lived over-cap entry
-      // (RowMemo.getOrBuild re-registers it on the next consumer, so
-      // the cost is one recompute, never a permanently-uncached plan).
-      // If the clear cadence ever tightens, re-check both.
-      val processed = new java.util.concurrent.atomic.AtomicInteger(0)
-      val workers = (1 to nThreads).map { _ =>
-        val t = new Thread(() => {
-          var cur = nextEntry()
-          while (cur.isDefined) {
-            runOne(cur.get._1, cur.get._2)
-            if (processed.incrementAndGet() % 32 == 0) spark.catalog.clearCache()
-            cur = nextEntry()
-          }
-        })
-        t.start(); t
-      }
-      workers.foreach(_.join())
+    val workers = (1 to Workers).map { _ =>
+      val t = new Thread(() => {
+        var cur = nextEntry()
+        while (cur.isDefined) {
+          runOne(cur.get._1, cur.get._2)
+          if (processed.incrementAndGet() % 32 == 0) spark.catalog.clearCache()
+          cur = nextEntry()
+        }
+      })
+      t.start(); t
     }
+    workers.foreach(_.join())
     spark.stop()
   }
 }

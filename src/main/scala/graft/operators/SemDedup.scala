@@ -38,7 +38,7 @@ object SemDedup {
     import spark.implicits._
     GraftFunctions.register(spark)
     val nv = embs.select($"vec_id", $"embedding", Vectors.norm($"embedding").as("nrm"))
-    val p = graft.util.ShufflePartitions.batch(spark)
+    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val a = nv.select($"vec_id".as("a_id"), $"embedding".as("ea"), $"nrm".as("na"))
       .repartition(p)
     val b = nv.select($"vec_id".as("b_id"), $"embedding".as("eb"), $"nrm".as("nb"))

@@ -601,7 +601,7 @@ object Docs {
     * pre-split; the repartition then just rebalances). */
   private def shingleSets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val p = graft.util.ShufflePartitions.batch(s)
+    val p = s.conf.get("spark.sql.shuffle.partitions").toInt
     docs(s, dir).repartition(p)
       .select($"doc_id", Text.shingleHashes($"text", ShingleK).as("sh"))
   }
@@ -1139,7 +1139,7 @@ object Docs {
       // The pair join is a broadcast nested loop; the probe side arrives as
       // one parquet split, so spread it across cores (at cluster scale this
       // is the map-side parallelism of the O(n²/p) block comparison).
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val a = nv.select($"vec_id".as("a_id"), $"embedding".as("ea"), $"nrm".as("na"))
         .repartition(p)
       val b = nv.select($"vec_id".as("b_id"), $"embedding".as("eb"), $"nrm".as("nb"))
@@ -1167,7 +1167,7 @@ object Docs {
       import s.implicits._
       val nv = embs(s, dir)
         .select($"vec_id", $"embedding", Vectors.norm($"embedding").as("nrm"))
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val q = nv.filter($"vec_id" < 10)
         .select($"vec_id".as("q_id"), $"embedding".as("eq"), $"nrm".as("nq"))
       val c = nv.select($"vec_id".as("neighbor_id"), $"embedding".as("ec"), $"nrm".as("nc"))
@@ -1296,7 +1296,7 @@ object Docs {
         |SELECT a_id, b_id, n_shared FROM pairs
         |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val fps = docs(s, dir).repartition(p)
         .select($"doc_id",
           explode(call_function("winnow",
@@ -1557,7 +1557,7 @@ object Docs {
          |  AND len(list_intersect(c.sh, e.sh)) > 0
          |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       // join key = xxhash64 of the 8-gram: the broadcast table carries
       // 8-byte keys instead of ~50-byte strings (counts over distinct
       // hashes equal counts over strings sans a ~2^-64 collision);
@@ -1600,7 +1600,7 @@ object Docs {
          |  CAST(CASE WHEN 10 * n_hit >= n_grams THEN 1 ELSE 0 END AS BIGINT) AS flagged
          |FROM hit ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val sh8 = docs(s, dir).repartition(p)
         .select($"doc_id", Text.shingleHashes($"text", 8).as("sh"))
       val evalGrams = sh8.filter($"doc_id" < 25)
@@ -1667,7 +1667,7 @@ object Docs {
          |  COUNT(*) AS n_distinct_bigrams
          |FROM cnt GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       docs(s, dir).repartition(p) // the local corpus arrives as ONE split
         // multiset form: every bigram occurrence, hashed natively in one
         // pass (the composed transform/slice/concat_ws pipeline was
@@ -1697,7 +1697,7 @@ object Docs {
          |FROM tok GROUP BY term
          |ORDER BY tf DESC, term LIMIT 50""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       docs(s, dir).repartition(p) // the local corpus arrives as ONE split
         .select($"doc_id", $"lang", explode(Text.tokens($"text")).as("term"))
         .groupBy($"term", $"lang", $"doc_id").agg(count(lit(1)).as("c"))
@@ -1765,7 +1765,7 @@ object Docs {
          |FROM w JOIN dfq USING (g)
          |GROUP BY w.doc_id ORDER BY w.doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val w = docs(s, dir).repartition(p)
         .select($"doc_id", explode(Text.shingleHashesAll($"text", 16)).as("g"))
         .persist()
@@ -1809,7 +1809,7 @@ object Docs {
          |SELECT q_id, CAST(label AS BIGINT) AS pred_label, n_votes
          |FROM wn WHERE vr = 1 ORDER BY q_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val nv = embs(s, dir)
         .select($"vec_id", $"embedding", $"label", Vectors.norm($"embedding").as("nrm"))
       val q = nv.filter($"vec_id" < 20)
@@ -2649,7 +2649,7 @@ object Docs {
     // corpus-quadratic, and nothing shuffles gram text (md5 only).
     GraftQuery.sql("d52_repetition_suite", repetitionSuiteOracle) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val tk = docs(s, dir).repartition(p) // the local corpus arrives as ONE split
         .filter(length(Text.normalize($"text")) > 0)
         .select($"doc_id", Text.tokens($"text").as("toks"))
@@ -2740,7 +2740,7 @@ object Docs {
          |FROM dg JOIN f USING (g)
          |GROUP BY dg.doc_id ORDER BY dg.doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       // same clamp convention as d20/d24/d69: a short doc contributes its
       // ONE partial shingle (the shingleHashes contract), and empty-norm
       // docs are excluded on both sides — without this the oracle's
@@ -3214,7 +3214,7 @@ object Docs {
     GraftQuery.sql("d62_bloom_decontaminate",
       DecontaminationFilter.oracleSql) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val sh8 = docs(s, dir).repartition(p)
         .select($"doc_id", Text.shingleHashes($"text", 8).as("sh"))
       // build once over the (tiny) eval side; ships as a task literal.
@@ -3699,7 +3699,7 @@ object Docs {
          |  CAST(n_label AS BIGINT) AS n_label, CAST(rk AS BIGINT) AS rk
          |FROM rk WHERE rk <= 2 ORDER BY q_id, rk""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val nv = embs(s, dir)
         .select($"vec_id", $"embedding", $"label", Vectors.norm($"embedding").as("nrm"))
       val q = nv.filter($"vec_id" < 20)

@@ -3,9 +3,10 @@ package graft.queries
 import graft.Tables
 import graft.streaming.{BatchingSink, FileRecordWriter, ShardedLog, StreamOps, ToRecord}
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming transport operators (SURVEY.md §2.1) run end-to-end as real
   * Structured Streaming queries against driver testdata, then surfaced
@@ -35,80 +36,36 @@ object Streaming {
   private def ckptDir(): String =
     graft.util.TempDirs.freshUnder("/dev/shm", "graft-ckpt")
 
-  /** Session confs every bounded drain runs under, restored after:
-    * few state partitions (drain cost is per-partition state-store
-    * checkpointing, not data volume — a real deployment sizes this to
-    * key cardinality / executor count), and the state-store PROVIDER
-    * selected by `graft.stream.stateStore`: the default HDFS-backed
-    * in-memory store, or `rocksdb` for Spark's RocksDB provider — the
-    * store a 100 TB deployment runs, where per-key state must spill
-    * beyond executor heap; StreamingSpec pins provider-identical
-    * results on the stateful operators. */
-  /** Reentrancy bookkeeping for [[withDrainConfs]]: the conf mutation is
-    * session-global, and the concurrent Verify loop can overlap several
-    * drains (and drains with batch entries). A naive save/set/restore
-    * races — a drain that snapshots another drain's temporary value as
-    * its "previous" restores the WRONG baseline and the session conf
-    * stays corrupted for the rest of the run. Instead the FIRST drain
-    * in captures the baseline and sets the drain confs; the LAST drain
-    * out restores the baseline — all drains set identical values, so
-    * overlap is harmless in between. (Single active session per JVM —
-    * true for Verify, Bench, and the shared-session test suites.) */
-  private object DrainConfs {
-    var active = 0
-    var baselineParts: String = _
-    var baselineProvider: Option[String] = None
-  }
-
-  private def withDrainConfs[T](spark: SparkSession)(body: => T): T = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    DrainConfs.synchronized {
-      if (DrainConfs.active == 0) {
-        DrainConfs.baselineParts = spark.conf.get("spark.sql.shuffle.partitions")
-        DrainConfs.baselineProvider = spark.conf.getOption(providerKey)
-        // publish the baseline for conf-reading BATCH entries: while the
-        // drain holds the live conf at the drain value, batch plans that
-        // size from shuffle.partitions must keep seeing the pre-drain
-        // value or a concurrent Verify drain changes batch plan shapes
-        // mid-run (see util.ShufflePartitions)
-        graft.util.ShufflePartitions.setDrainBaseline(
-          DrainConfs.baselineParts.toInt)
-        spark.conf.set("spark.sql.shuffle.partitions",
-          spark.conf.get("graft.stream.parts", "8"))
-        if (spark.conf.get("graft.stream.stateStore", "hdfs") == "rocksdb")
-          spark.conf.set(providerKey,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      }
-      DrainConfs.active += 1
-    }
-    try body
-    finally DrainConfs.synchronized {
-      DrainConfs.active -= 1
-      if (DrainConfs.active == 0) {
-        spark.conf.set("spark.sql.shuffle.partitions", DrainConfs.baselineParts)
-        graft.util.ShufflePartitions.clearDrainBaseline()
-        DrainConfs.baselineProvider match {
-          case Some(v) => spark.conf.set(providerKey, v)
-          case None => spark.conf.unset(providerKey)
-        }
-      }
-    }
+  /** Runs one bounded drain on a CLONE of the caller's session. The
+    * clone inherits every conf — the state-store provider included, so
+    * a session set to Spark's RocksDB provider drains on RocksDB — and
+    * gets the drain's own shuffle-partition count, `graft.stream.parts`
+    * (default 4: drain cost is per-partition state-store checkpointing,
+    * not data volume; a real deployment sizes this to key cardinality /
+    * executor count). The caller's session, which concurrent batch
+    * entries plan against, is never changed: as in Structured Streaming
+    * itself, a query's configuration is fixed by the session it starts
+    * on. `feed` drives the started query; the memory sink's table comes
+    * back re-homed onto the caller's session. */
+  private def drainOnClone(spark: SparkSession, df: DataFrame, outputMode: String)(
+      feed: StreamingQuery => Unit): DataFrame = {
+    val name = "g_" + UUID.randomUUID().toString.replace("-", "")
+    val drainSession = GraftSqlBridge.cloneSession(spark)
+    drainSession.conf.set("spark.sql.shuffle.partitions",
+      spark.conf.get("graft.stream.parts", "4"))
+    val q = GraftSqlBridge.ofRows(drainSession, df.queryExecution.logical).writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode(outputMode)
+      .option("checkpointLocation", ckptDir())
+      .start()
+    try feed(q) finally q.stop()
+    GraftSqlBridge.ofRows(spark, drainSession.table(name).queryExecution.analyzed)
   }
 
   private def drainToTable(spark: SparkSession, df: DataFrame,
-                           outputMode: String): DataFrame = {
-    val name = "g_" + UUID.randomUUID().toString.replace("-", "")
-    withDrainConfs(spark) {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckptDir())
-        .start()
-      try { q.processAllAvailable() } finally { q.stop() }
-    }
-    spark.table(name)
-  }
+                           outputMode: String): DataFrame =
+    drainOnClone(spark, df, outputMode)(_.processAllAvailable())
 
   /** Like drainToTable, but the query STARTS BEFORE any data exists and
     * each chunk is fed between processAllAvailable calls — so every
@@ -119,34 +76,22 @@ object Streaming {
     * micro-batch and silently skip the merge path (ADVICE r4). */
   private def drainChunksToTable[A](spark: SparkSession, df: DataFrame,
                                     outputMode: String, in: MemoryStream[A],
-                                    chunks: Seq[Seq[A]]): DataFrame = {
-    val name = "g_" + UUID.randomUUID().toString.replace("-", "")
-    withDrainConfs(spark) {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckptDir())
-        .start()
-      try {
-        chunks.foreach { c => in.addData(c); q.processAllAvailable() }
-      } finally { q.stop() }
+                                    chunks: Seq[Seq[A]]): DataFrame =
+    drainOnClone(spark, df, outputMode) { q =>
+      chunks.foreach { c => in.addData(c); q.processAllAvailable() }
     }
-    spark.table(name)
-  }
 
-  /** Bench-tunable micro-batch chunking: split `rows` into
-    * `graft.stream.chunks` successive feeds (default 4, floor 2 so the
-    * cross-batch merge path executes whenever the feed has >= 2 rows —
-    * a 0/1-row feed cannot split and runs a single batch). Every
-    * entry's final table
-    * is chunk-count-invariant — that is exactly the streaming/batch
-    * parity the oracles and StreamingSpec pin — so the knob trades only
-    * drain cost (state-store commits × batches, the harness floor)
-    * against how many merge steps run; Bench sets 2, Verify and the
-    * specs keep the default 4. */
+  /** Micro-batch chunking: split `rows` into `graft.stream.chunks`
+    * successive feeds (default 2 — the minimum that still runs the
+    * cross-batch merge path whenever the feed has >= 2 rows; a 0/1-row
+    * feed cannot split and runs a single batch). Every entry's final
+    * table is chunk-count-invariant — that is exactly the
+    * streaming/batch parity the oracles and StreamingSpec pin — so the
+    * key trades only drain cost (state-store commits × batches, the
+    * harness floor) against how many merge steps run. Bench, Verify
+    * and the specs all drain at the defaults. */
   private def mbChunks[A](s: SparkSession, rows: Seq[A]): Seq[Seq[A]] = {
-    val n = s.conf.get("graft.stream.chunks", "4").toInt.max(2)
+    val n = s.conf.get("graft.stream.chunks", "2").toInt.max(2)
     rows.grouped(math.max(1, rows.size / n)).toSeq
   }
 
@@ -221,12 +166,10 @@ object Streaming {
          |  CAST(SUM(event_id) AS BIGINT) AS id_sum
          |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
-      // chunk sized so the drain is always a fixed number of rate-limited
-      // batches (default ~8; Bench halves it — same nothing-lost/doubled
-      // contract, less harness floor), independent of SF (a fixed chunk
-      // would mean O(rows) micro-batches at larger scale factors —
-      // harness time, not operator work)
-      val batches = s.conf.get("graft.stream.batches", "8").toInt.max(2)
+      // chunk sized so the drain is always ~4 rate-limited batches,
+      // independent of SF (a fixed chunk would mean O(rows) micro-batches
+      // at larger scale factors — harness time, not operator work)
+      val batches = 4
       val total = Tables.events(s, dir).count()
       val chunk = math.max(500L, total / 4 / batches + 1).toInt
       val root = materializeLog(s, dir, chunk)

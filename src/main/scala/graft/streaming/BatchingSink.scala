@@ -18,7 +18,10 @@ import scala.collection.mutable
   *   - per-record result routing (KinesisGraphStage.scala:110-125):
   *     throttled records are re-queued into the buffer for the next
   *     flush, other failures emit `Left(error)`, successes emit
-  *     `Right(record)` — the dead-letter channel;
+  *     `Right(record)` — the dead-letter channel. Unlike the reference,
+  *     the requeue is bounded: a record throttled more than `maxTries`
+  *     times emits `Left(PutError(record, ThrottledCode))`, so a
+  *     writer that throttles forever cannot hang the sink;
   *   - rate-limit self-throttling off the hot path: a flush that saw
   *     throttling sleeps `throttleBackoffMs` (=800) before returning
   *     (KinesisGraphStage.scala:100-108).
@@ -93,7 +96,8 @@ class BatchingSink[A](
     * accumulated the whole partition's Either channel before returning,
     * which at a fat 100 TB partition is an O(partition) heap hold. */
   def run(records: Iterator[A]): Iterator[Either[PutError[A], A]] = {
-    val buffer = mutable.Queue.empty[A]
+    // each buffered record with the number of times it was throttled
+    val buffer = mutable.Queue.empty[(A, Int)]
 
     def flush(): Seq[Either[PutError[A], A]] = {
       if (buffer.isEmpty) Seq.empty
@@ -105,15 +109,18 @@ class BatchingSink[A](
           // service errors retry with backoff; client errors fail fast
           // (reference KinesisSource.scala:290-302 taxonomy)
           retryable = !_.isInstanceOf[ClientException]) {
-          put(batch)
+          put(batch.map(_._1))
         }
         require(results.length == batch.length,
           s"transport returned ${results.length} results for ${batch.length} records")
         val out = mutable.ArrayBuffer.empty[Either[PutError[A], A]]
         var throttled = 0
-        results.lazyZip(batch).foreach { (r, a) =>
+        results.lazyZip(batch).foreach { case (r, (a, throttles)) =>
           r.errorCode match {
-            case Some(ThrottledCode) => buffer.enqueue(a); throttled += 1
+            case Some(ThrottledCode) =>
+              throttled += 1
+              if (throttles < config.maxTries) buffer.enqueue((a, throttles + 1))
+              else out += Left(PutError(a, ThrottledCode))
             case Some(code) => out += Left(PutError(a, code))
             case None => out += Right(a)
           }
@@ -130,7 +137,7 @@ class BatchingSink[A](
         // requeued throttles left >= threshold flush before new pulls,
         // so the buffer never outgrows maxBufferSize
         while (records.hasNext && buffer.length < config.sendingThreshold)
-          buffer.enqueue(records.next())
+          buffer.enqueue((records.next(), 0))
         flush()
       }
     }

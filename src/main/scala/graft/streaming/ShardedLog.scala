@@ -160,21 +160,24 @@ object ShardedLog {
       .map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  /** Read one record file with the reference's read-path error taxonomy
-    * (reference KinesisSource.scala:290-302): client-class errors — the
-    * file is gone or unreadable by construction — fail the task fast
-    * (retrying can never succeed), anything else I/O-shaped is treated
-    * as transient (an object-store throttle / flaky NFS in real life)
-    * and retried with exponential backoff. */
+  /** The reference's read-path error taxonomy (reference
+    * KinesisSource.scala:290-302): client-class errors — the file is
+    * gone or unreadable by construction — fail the task fast (retrying
+    * can never succeed), anything else I/O-shaped is treated as
+    * transient (an object-store throttle / flaky NFS in real life) and
+    * retried with exponential backoff. */
+  private val retryableRead: Throwable => Boolean = {
+    case _: java.nio.file.NoSuchFileException | _: java.nio.file.AccessDeniedException => false
+    case _: java.io.IOException => true
+    case _ => false
+  }
+
+  /** Read one record file's lines, retried per [[retryableRead]]. */
   def readRecLines(
       p: Path, tries: Int = 7,
       onError: (Throwable, Int) => Unit = graft.util.Retry.expBackoff()): Seq[String] =
-    graft.util.Retry.withRetries(tries, onError, retryable = {
-      case _: java.nio.file.NoSuchFileException => false
-      case _: java.nio.file.AccessDeniedException => false
-      case _: java.io.IOException => true
-      case _ => false
-    })(Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq)
+    graft.util.Retry.withRetries(tries, onError, retryableRead)(
+      Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq)
 
   /** Read one record file as byte-exact payloads, whichever layout it
     * uses: `.recb` → length-prefixed frames; `.rec` → UTF-8 lines
@@ -185,12 +188,7 @@ object ShardedLog {
       onError: (Throwable, Int) => Unit = graft.util.Retry.expBackoff()): Seq[Array[Byte]] =
     if (!p.getFileName.toString.endsWith(".recb"))
       readRecLines(p, tries, onError).map(_.getBytes(StandardCharsets.UTF_8))
-    else graft.util.Retry.withRetries(tries, onError, retryable = {
-      case _: java.nio.file.NoSuchFileException => false
-      case _: java.nio.file.AccessDeniedException => false
-      case _: java.io.IOException => true
-      case _ => false
-    }) {
+    else graft.util.Retry.withRetries(tries, onError, retryableRead) {
       val bytes = Files.readAllBytes(p)
       val bb = java.nio.ByteBuffer.wrap(bytes)
       val out = Seq.newBuilder[Array[Byte]]

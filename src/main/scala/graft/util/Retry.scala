@@ -1,6 +1,9 @@
 package graft.util
 
+import java.nio.channels.ClosedByInterruptException
+import org.apache.spark.TaskKilledException
 import scala.annotation.tailrec
+import scala.util.control.NonFatal
 
 /** Bounded-retry combinator — the Spark-side twin of the reference's
   * generic `withRetries` (reference package.scala:8-17: tail-recursive,
@@ -8,22 +11,43 @@ import scala.annotation.tailrec
   * backoff hook the reference sink installs
   * (reference KinesisGraphStage.scala:92-98: 2^n seconds per retry).
   * The sleeper is injectable so specs run without wall-clock waits.
+  *
+  * Cancellation always wins over the retry budget: a killed task or a
+  * stopped query interrupts its thread, and a retry loop that swallowed
+  * the interrupt would keep the thread busy for minutes of backoff.
   */
 object Retry {
 
+  /** The calling thread is being cancelled: never retried, and the
+    * interrupt flag is re-asserted before the error is rethrown (a
+    * thrown InterruptedException has already cleared it). */
+  private def cancelled(err: Throwable): Boolean = err match {
+    case _: InterruptedException | _: ClosedByInterruptException | _: TaskKilledException => true
+    case _ => Thread.currentThread().isInterrupted
+  }
+
+  private def rethrow(err: Throwable): Nothing = {
+    if (cancelled(err)) Thread.currentThread().interrupt()
+    throw err
+  }
+
+  /** Runs the error hook (the backoff sleep), so an interrupt there
+    * also re-asserts the flag on its way out. */
+  private def backoff(onError: (Throwable, Int) => Unit, err: Throwable, tries: Int): Unit =
+    try onError(err, tries) catch { case e: Throwable => rethrow(e) }
+
   /** @param retryable error taxonomy (reference KinesisSource.scala:
     *   290-302): transient/service errors retry, client errors (bad
-    *   request, auth) fail fast — retrying them can never succeed. */
+    *   request, auth) fail fast — retrying them can never succeed. Only
+    *   non-fatal, non-cancellation errors reach it. */
   @tailrec
   def withRetries[T](tries: Int = 7, onError: (Throwable, Int) => Unit = (_, _) => (),
                      retryable: Throwable => Boolean = _ => true)(f: => T): T =
     try f catch {
       case err: Throwable =>
-        if (tries < 1 || !retryable(err)) throw err
-        else {
-          onError(err, tries)
-          withRetries(tries - 1, onError, retryable)(f)
-        }
+        if (!NonFatal(err) || cancelled(err) || tries < 1 || !retryable(err)) rethrow(err)
+        backoff(onError, err, tries)
+        withRetries(tries - 1, onError, retryable)(f)
     }
 
   /** 2^n-seconds backoff hook (n = remaining tries, as in the reference),

@@ -406,24 +406,24 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("entries are micro-batch-chunk-count invariant (bench knob safety)") {
-    // Bench drains with graft.stream.chunks=2 / parts=4 to cut the
-    // state-store harness floor; the knob is only sound if the final
-    // table is identical under any chunking — assert it on entries
-    // covering the three state shapes (mergeable summary, GroupState
-    // fold, complete-mode re-agg)
+    // Every drain runs at the Streaming defaults, graft.stream.chunks=2
+    // / parts=4, to cut the state-store harness floor; that is only
+    // sound if the final table is identical under any chunking — assert
+    // it against an explicit 4-chunk / 8-part run on entries covering
+    // the three state shapes (mergeable summary, GroupState fold,
+    // complete-mode re-agg)
     val names = Seq("s13_stream_histogram_quantiles",
       "s16_stream_weekly_drift", "s9_stream_content_dedup")
     names.foreach { n =>
-      val four = SparkEntry.queries(n)(spark, Sf0001).collect().toSeq
-      spark.conf.set("graft.stream.chunks", "2")
-      spark.conf.set("graft.stream.parts", "4")
-      try {
-        val two = SparkEntry.queries(n)(spark, Sf0001).collect().toSeq
-        assert(two === four, s"$n diverged under 2-chunk drain")
-      } finally {
+      spark.conf.set("graft.stream.chunks", "4")
+      spark.conf.set("graft.stream.parts", "8")
+      val four = try SparkEntry.queries(n)(spark, Sf0001).collect().toSeq
+      finally {
         spark.conf.unset("graft.stream.chunks")
         spark.conf.unset("graft.stream.parts")
       }
+      val two = SparkEntry.queries(n)(spark, Sf0001).collect().toSeq
+      assert(two === four, s"$n diverged under 2-chunk drain")
     }
   }
 
@@ -491,21 +491,22 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("state-store providers are interchangeable: RocksDB equals the default store") {
-    // the drain harness honors graft.stream.stateStore=rocksdb — the
-    // provider a 100 TB deployment runs (per-key state spills beyond
-    // executor heap). Run the suite's three state-shape archetypes —
-    // GroupState fold (s14), watermarked dedup (s9), complete-mode
+    // a drain runs on a clone of the caller's session, so it inherits
+    // Spark's own provider key — set here to RocksDB, the provider a
+    // 100 TB deployment runs (per-key state spills beyond executor
+    // heap). Run the suite's three state-shape archetypes — GroupState fold (s14), watermarked dedup (s9), complete-mode
     // re-aggregation (s15) — under both providers; results must be
     // row-identical. This is the guard that no operator depends on
     // HDFSBackedStateStore quirks (e.g. in-JVM object identity).
+    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
     def run(name: String): Set[org.apache.spark.sql.Row] =
       SparkEntry.queries(name)(spark, Sf0001).collect().toSet
     for (entry <- Seq("s14_stream_running_outliers", "s9_stream_content_dedup",
         "s15_stream_ohlc_bars")) {
       val default = run(entry)
-      spark.conf.set("graft.stream.stateStore", "rocksdb")
-      val rocks = try run(entry)
-        finally spark.conf.unset("graft.stream.stateStore")
+      spark.conf.set(ProviderKey,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val rocks = try run(entry) finally spark.conf.unset(ProviderKey)
       assert(default.nonEmpty, s"$entry drained empty")
       assert(rocks === default, s"$entry differs across state-store providers")
     }

@@ -199,6 +199,39 @@ trait TransportConformanceKit extends SparkSpec {
     }
   }
 
+  test(s"[$transportName] an always-throttling writer terminates with every record in Left") {
+    withFixture2 { f =>
+      // a writer that throttles every put: the sink's requeue is bounded by maxTries, so each record is put
+      // maxTries + 1 times and then dead-letters as throttled. The put
+      // cap turns a regression to unbounded requeue into a failure, not
+      // a hang.
+      val puts = mutable.Map.empty[String, Int].withDefaultValue(0)
+      val throttling = new RecordWriter {
+        override def putRecords(records: Seq[(String, Array[Byte])]) = {
+          records.foreach { case (k, _) => puts(k) += 1 }
+          if (puts.values.sum > 1000)
+            throw new BatchingSink.ClientException("throttle requeue never terminated")
+          records.map(_ => BatchingSink.PutResult(Some(BatchingSink.ThrottledCode)))
+        }
+      }
+      implicit val rec: ToRecord[(String, String)] =
+        ToRecord.instance(_._1, _._2.getBytes("UTF-8"))
+      val config = BatchingSink.Config(sendingThreshold = 10, maxBufferSize = 20, maxTries = 3)
+      val sink = BatchingSink.over[(String, String)](throttling, config, sleeper = _ => ())
+      val input = (1 to 24).map(i => (s"key-$i", s"v-$i"))
+      val out = sink.run(input.iterator).toSeq
+
+      assert(out.size === input.size)
+      assert(out.forall(_.left.toOption.exists(_.errorCode == BatchingSink.ThrottledCode)))
+      assert(out.map(_.left.toOption.get.record).toSet === input.toSet)
+      assert(puts.toMap === input.map(_._1 -> (config.maxTries + 1)).toMap)
+      // nothing dead-lettered reached the log: only a directly appended
+      // sentinel drains
+      f.append("s0", "sentinel")
+      assert(drain(f.id).map(_._3) === Seq("sentinel"))
+    }
+  }
+
   test(s"[$transportName] non-UTF-8 binary payloads round-trip byte-exactly") {
     withFixture2 { f =>
       implicit val rec: ToRecord[(String, Array[Byte])] =

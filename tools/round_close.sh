@@ -7,7 +7,8 @@
 #   2. optional: sbt test (skip with ROUND_CLOSE_SKIP_TESTS=1 when the
 #      suite already ran green on the same tree — say so in the note)
 #   3. graft.Verify at sf0.01 (concurrent dump, all 185 entries)
-#   4. tools/check.py — the driver-faithful dtype-strict DuckDB compare
+#   4. tools/check.py — the dtype-strict DuckDB compare;
+#      fails on any FAIL or EMPTY entry
 #   5. prints the SWEEP line (appends to SWEEP.md with ROUND_CLOSE_APPEND=1)
 #
 # Usage: tools/round_close.sh <round> [note...]
@@ -28,8 +29,11 @@ TESTS="tests skipped (ROUND_CLOSE_SKIP_TESTS=1)"
 if [ "${ROUND_CLOSE_SKIP_TESTS:-0}" != "1" ]; then
   sbt test > /tmp/round_close_test.log 2>&1 \
     || fail "sbt test failed (see /tmp/round_close_test.log)"
-  TESTS=$(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_close_test.log \
-    | awk '{s+=$3} END {print s " tests green"}')
+  n_tests=$(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_close_test.log \
+    | awk '{s+=$3} END {print s}')
+  [ -n "$n_tests" ] \
+    || fail "no 'Tests: succeeded N' count in the test log (see /tmp/round_close_test.log)"
+  TESTS="$n_tests tests green"
 fi
 
 OUT=$(mktemp -d /tmp/round_close_verify.XXXXXX)
@@ -39,7 +43,7 @@ tools/run_main.sh graft.Verify /root/testdata/sf0.01 "$OUT" \
 
 rc=0
 python3 tools/check.py /root/testdata/sf0.01 "$OUT" > "$OUT/check.log" 2>&1 || rc=$?
-grep '^FAIL' "$OUT/check.log" >&2 || true
+grep -E '^(FAIL|EMPTY)' "$OUT/check.log" >&2 || true
 tally=$(grep -Eo '== [0-9]+ pass, [0-9]+ fail, [0-9]+ rows-only ==' "$OUT/check.log" | tail -1)
 [ -n "$tally" ] || fail "check.py produced no tally (rc=$rc, see $OUT/check.log)"
 pass=$(echo "$tally" | awk '{print $2}')
@@ -48,6 +52,9 @@ rows=$(echo "$tally" | awk '{print $6}' | tr -d ',')
 total=$((pass + failn + rows))
 [ "$rc" -eq 0 ] || fail "check.py exited nonzero ($rc): $tally (see $OUT/check.log)"
 [ "$failn" -eq 0 ] || fail "oracle compare has $failn FAIL entries: $tally"
+# rows-only entries must have rows: an empty result counts as a failure
+empty=$(grep -c '^EMPTY' "$OUT/check.log" || true)
+[ "$empty" -eq 0 ] || fail "oracle compare has $empty EMPTY rows-only entries: $tally"
 
 SHA=$(git rev-parse --short HEAD 2>/dev/null || echo unknown)
 DIRTY=""
