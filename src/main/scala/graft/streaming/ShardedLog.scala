@@ -112,22 +112,40 @@ object ShardedLog {
     else withDirStream(root)(_.filter(Files.isDirectory(_)).toSeq)
       .sortBy(_.getFileName.toString)
 
-  /** (seq, path, mtimeMicros) of record files in a shard, seq-ascending.
-    * Covers both layouts: `.rec` (UTF-8 lines) and `.recb`
-    * (length-prefixed binary payloads, [[appendBinary]]). */
-  private[streaming] def listFiles(shardDir: Path): Seq[(Long, Path, Long)] =
+  /** The sequence a record file name carries: `<seq>.rec` (UTF-8 lines)
+    * or `<seq>.recb` (length-prefixed binary payloads, [[appendBinary]]);
+    * None for anything else (temp files, `.parent`). */
+  private def seqOf(name: String): Option[Long] =
+    if (name.startsWith(".")) None
+    else if (name.endsWith(".recb")) name.stripSuffix(".recb").toLongOption
+    else if (name.endsWith(".rec")) name.stripSuffix(".rec").toLongOption
+    else None
+
+  /** (seq, path) of the record files in a shard, seq-ascending, from the
+    * directory listing alone: nothing here stats a file, so a caller
+    * pays one directory read whatever the log length. An arrival time is
+    * read on demand through [[mtimeUs]], only for the files that need
+    * one. */
+  private[streaming] def listSeqs(shardDir: Path): Seq[(Long, Path)] =
     withDirStream(shardDir) {
-      _.flatMap { p =>
-        val n = p.getFileName.toString
-        val stem =
-          if (n.startsWith(".")) None
-          else if (n.endsWith(".recb")) Some(n.stripSuffix(".recb"))
-          else if (n.endsWith(".rec")) Some(n.stripSuffix(".rec"))
-          else None
-        stem.flatMap(_.toLongOption).map(seq =>
-          (seq, p, Files.getLastModifiedTime(p).toMillis * 1000L))
-      }.toSeq
+      _.flatMap(p => seqOf(p.getFileName.toString).map(_ -> p)).toSeq
     }.sortBy(_._1)
+
+  /** The highest sequence in a shard, 0 when it is empty or missing —
+    * from names only, like [[listSeqs]]. */
+  private[streaming] def lastSeq(shardDir: Path): Long =
+    if (!Files.isDirectory(shardDir)) 0L
+    else listSeqs(shardDir).lastOption.map(_._1).getOrElse(0L)
+
+  /** A record file's arrival time in micros: its mtime (one stat). */
+  private[streaming] def mtimeUs(p: Path): Long =
+    Files.getLastModifiedTime(p).toMillis * 1000L
+
+  /** Whether the shard holds a record file at `seq`, in either layout —
+    * two name probes, no listing. */
+  private[streaming] def hasSeq(shardDir: Path, seq: Long): Boolean =
+    Files.exists(shardDir.resolve(f"$seq%08d.rec")) ||
+      Files.exists(shardDir.resolve(f"$seq%08d.recb"))
 
   /** Declare `child` as the product of resharding `parent`: the source
     * will not admit the child's records until every parent record
@@ -162,12 +180,14 @@ object ShardedLog {
 
   /** The reference's read-path error taxonomy (reference
     * KinesisSource.scala:290-302): client-class errors — the file is
-    * gone or unreadable by construction — fail the task fast (retrying
-    * can never succeed), anything else I/O-shaped is treated as
-    * transient (an object-store throttle / flaky NFS in real life) and
-    * retried with exponential backoff. */
+    * gone or unreadable by construction, or its bytes are not UTF-8
+    * (a `.rec` that does not decode is corrupt for good) — fail the task
+    * fast (retrying can never succeed), anything else I/O-shaped is
+    * treated as transient (an object-store throttle / flaky NFS in real
+    * life) and retried with exponential backoff. */
   private val retryableRead: Throwable => Boolean = {
-    case _: java.nio.file.NoSuchFileException | _: java.nio.file.AccessDeniedException => false
+    case _: java.nio.file.NoSuchFileException | _: java.nio.file.AccessDeniedException |
+        _: java.nio.charset.CharacterCodingException => false
     case _: java.io.IOException => true
     case _ => false
   }
@@ -410,9 +430,13 @@ case class ShardedLogPartition(shard: String, afterSeq: Long, toSeq: Long,
 class ShardedLogReader(partition: ShardedLogPartition) extends PartitionReader[InternalRow] {
   private val rows: Iterator[InternalRow] =
     partition.reader.read(partition.shard, partition.afterSeq, partition.toSeq).map { r =>
+      val payload = r.payload
+      // without `bin` the payload is exactly the UTF-8 of `value`: reuse
+      // those bytes instead of encoding the text a second time
+      val value =
+        if (r.bin.isEmpty) UTF8String.fromBytes(payload) else UTF8String.fromString(r.value)
       new GenericInternalRow(Array[Any](
-        UTF8String.fromString(r.shard), r.seq, UTF8String.fromString(r.value),
-        r.payload, r.tsUs))
+        UTF8String.fromString(r.shard), r.seq, value, payload, r.tsUs))
     }
   private var current: InternalRow = _
   override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }

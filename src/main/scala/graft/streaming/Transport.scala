@@ -174,7 +174,13 @@ object TransportRegistry {
 /** [[ShardReader]] over the sharded-log file layout
   * (`<root>/<shard>/<seq>.rec`, [[ShardedLog]]) — the local, durable,
   * default transport. Serializable: carries only the root path string;
-  * all IO goes through ShardedLog's retrying, taxonomy-aware readers. */
+  * all IO goes through ShardedLog's retrying, taxonomy-aware readers.
+  *
+  * Every call lists a shard by name only ([[ShardedLog.listSeqs]]), so
+  * `describeShards` and `maxSequence` stat no record file; `read` stats
+  * just the files in its range (their mtime is the arrival time) and
+  * `sequenceAtTimestamp` stats files in sequence order up to the first
+  * one at or after the timestamp. */
 final class FileShardReader(rootStr: String) extends ShardReader {
   private def root: Path = Paths.get(rootStr)
 
@@ -185,11 +191,7 @@ final class FileShardReader(rootStr: String) extends ShardReader {
         maxSeq = Some(maxSequence(name)))
     }
 
-  override def maxSequence(shard: String): Long = {
-    val dir = root.resolve(shard)
-    if (!Files.isDirectory(dir)) 0L
-    else ShardedLog.listFiles(dir).lastOption.map(_._1).getOrElse(0L)
-  }
+  override def maxSequence(shard: String): Long = ShardedLog.lastSeq(root.resolve(shard))
 
   override def sequenceAtTimestamp(shard: String, tsUs: Long): Long = {
     val dir = root.resolve(shard)
@@ -197,17 +199,25 @@ final class FileShardReader(rootStr: String) extends ShardReader {
     // takeWhile over the seq-ascending listing: file mtimes are
     // monotone with seq in an append-only log, and stopping at the
     // first at-or-after match mirrors the reference's "read from the
-    // first record at or after the timestamp"
-    else ShardedLog.listFiles(dir).takeWhile(_._3 < tsUs)
-      .lastOption.map(_._1).getOrElse(0L)
+    // first record at or after the timestamp"; the iterator stats no
+    // file past that match
+    else ShardedLog.listSeqs(dir).iterator
+      .takeWhile { case (_, p) => ShardedLog.mtimeUs(p) < tsUs }
+      .foldLeft(0L)((_, f) => f._1)
   }
 
+  /** A `.rec` line comes from a strict UTF-8 decode with its line break
+    * removed, so it always re-encodes to the bytes on disk: it becomes a
+    * text `Rec` as is, with no `Rec.ofBytes` round trip. A `.recb`
+    * payload may not be UTF-8 and goes through `ofBytes`. */
   override def read(shard: String, afterSeq: Long, toSeq: Long): Iterator[Transport.Rec] =
-    ShardedLog.listFiles(root.resolve(shard)).iterator
-      .filter { case (seq, _, _) => seq > afterSeq && seq <= toSeq }
-      .flatMap { case (seq, p, mtUs) =>
-        ShardedLog.readRecPayloads(p).map(payload =>
-          Transport.Rec.ofBytes(shard, seq, payload, mtUs))
+    ShardedLog.listSeqs(root.resolve(shard)).iterator
+      .filter { case (seq, _) => seq > afterSeq && seq <= toSeq }
+      .flatMap { case (seq, p) =>
+        val tsUs = ShardedLog.mtimeUs(p)
+        if (p.getFileName.toString.endsWith(".recb"))
+          ShardedLog.readRecPayloads(p).map(Transport.Rec.ofBytes(shard, seq, _, tsUs))
+        else ShardedLog.readRecLines(p).map(Transport.Rec(shard, seq, _, tsUs))
       }
 }
 
@@ -220,21 +230,35 @@ final class FileShardReader(rootStr: String) extends ShardReader {
   * observes a torn file). With [[BatchingSink.over]] on top this is the
   * full reference sink semantics against local durable storage.
   *
-  * Concurrency: sequence allocation is serialized per (root, shard)
-  * through a JVM-global lock, so the many per-partition sink instances
-  * of a local[n] job cannot allocate the same file sequence and
-  * replace each other's flushes (multi-JVM writers to one root would
-  * still race — that deployment belongs on a real shared-log
-  * transport, not local files). Payload contract: a flush whose
+  * Sequence allocation: each (root, shard) has one JVM-global cursor,
+  * whose monitor serializes the shard's flushes, so the many
+  * per-partition sink instances of a local[n] job (or several writers
+  * on one root) cannot allocate the same file sequence and replace each
+  * other's flushes. The cursor holds the last sequence written through
+  * it; a flush takes `last + 1` after two name probes — file `last`
+  * exists (as `.rec` or `.recb`) and file `last + 1` exists in neither
+  * form — so a put costs the same at any log length, like the
+  * reference's PutRecords. When a probe fails (the first flush, a
+  * deleted or recreated shard directory, an external
+  * [[ShardedLog.append]] at the next sequence) the flush lists the
+  * shard once, by name only, and continues after its highest sequence.
+  * The write and the atomic move stay inside the monitor.
+  *
+  * Caveats: multi-JVM writers to one root still race (that deployment
+  * belongs on a real shared-log transport, not local files), and an
+  * outside writer that leaves a gap in the sequence (writing `last + 2`
+  * while `last + 1` is free) is not detected: the next flush fills the
+  * gap at `last + 1`, which a reader already past `last + 2` never
+  * reads. Payload contract: a flush whose
   * payloads are all newline-free UTF-8 text lands in the
   * human-readable line layout (`.rec`); any flush carrying a payload
   * that would not survive that round-trip (embedded newlines,
   * non-UTF-8 bytes) is written whole as a length-prefixed binary file
   * (`.recb`, [[ShardedLog.appendBinary]]) — byte-exact either way, the
   * reference's format-agnostic ByteBuffer contract (reference
-  * KinesisSource.scala:68-70). */
+  * KinesisSource.scala:68-70). Both layouts share one sequence space. */
 final class FileRecordWriter(rootStr: String, numShards: Int = 4) extends RecordWriter {
-  import FileRecordWriter.lockFor
+  import FileRecordWriter.cursorFor
   override def putRecords(records: Seq[(String, Array[Byte])]): Seq[BatchingSink.PutResult] = {
     val root = Paths.get(rootStr)
     records.groupBy { case (k, _) => "shard-" + math.floorMod(k.hashCode, numShards) }
@@ -248,15 +272,14 @@ final class FileRecordWriter(rootStr: String, numShards: Int = 4) extends Record
             }) Some(decoded)
           else None
         }
-        lockFor(rootStr, shard).synchronized {
-          val dir = root.resolve(shard)
-          val next = (if (Files.isDirectory(dir))
-            ShardedLog.listFiles(dir).lastOption.map(_._1).getOrElse(0L)
-          else 0L) + 1L
+        val cursor = cursorFor(rootStr, shard)
+        cursor.synchronized {
+          val next = cursor.next(root.resolve(shard))
           asLines match {
             case Some(lines) => ShardedLog.append(root, shard, next, lines)
             case None => ShardedLog.appendBinary(root, shard, next, payloads)
           }
+          cursor.last = next
         }
       }
     records.map(_ => BatchingSink.PutResult(None))
@@ -264,9 +287,24 @@ final class FileRecordWriter(rootStr: String, numShards: Int = 4) extends Record
 }
 
 object FileRecordWriter {
-  private val locks = TrieMap.empty[(String, String), Object]
-  private def lockFor(root: String, shard: String): Object =
-    locks.getOrElseUpdate((root, shard), new Object)
+  /** One shard's sequence cursor; its monitor is the shard's write lock,
+    * and `last` is read and written only while holding it. */
+  private final class Cursor {
+    /** The last sequence written through this cursor; 0 before the
+      * first flush. */
+    var last = 0L
+
+    /** The sequence the next flush into `dir` takes: `last + 1` when
+      * the probes hold, else one past the highest sequence a listing
+      * finds (1 in an empty or missing directory). */
+    def next(dir: Path): Long =
+      if (last > 0 && ShardedLog.hasSeq(dir, last) && !ShardedLog.hasSeq(dir, last + 1)) last + 1
+      else ShardedLog.lastSeq(dir) + 1
+  }
+
+  private val cursors = TrieMap.empty[(String, String), Cursor]
+  private def cursorFor(root: String, shard: String): Cursor =
+    cursors.getOrElseUpdate((root, shard), new Cursor)
 }
 
 /** Both transport sides over a JVM-local in-memory log — the test fake

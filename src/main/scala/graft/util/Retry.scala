@@ -1,7 +1,7 @@
 package graft.util
 
 import java.nio.channels.ClosedByInterruptException
-import org.apache.spark.TaskKilledException
+import org.apache.spark.{TaskContext, TaskKilledException}
 import scala.annotation.tailrec
 import scala.util.control.NonFatal
 
@@ -15,6 +15,10 @@ import scala.util.control.NonFatal
   * Cancellation always wins over the retry budget: a killed task or a
   * stopped query interrupts its thread, and a retry loop that swallowed
   * the interrupt would keep the thread busy for minutes of backoff.
+  * Spark can also kill a task without interrupting it (a job cancelled
+  * with `interruptOnCancel = false`, the default): inside a task the
+  * loop asks its TaskContext before each backoff and before each retry,
+  * and the default backoff sleep wakes up when the task is killed.
   */
 object Retry {
 
@@ -46,9 +50,36 @@ object Retry {
     try f catch {
       case err: Throwable =>
         if (!NonFatal(err) || cancelled(err) || tries < 1 || !retryable(err)) rethrow(err)
+        throwIfKilled()
         backoff(onError, err, tries)
+        throwIfKilled()
         withRetries(tries - 1, onError, retryable)(f)
     }
+
+  /** Throws TaskKilledException when the calling task has been killed
+    * (Spark's own `killTaskIfInterrupted` is not public); a no-op
+    * outside a task. */
+  private def throwIfKilled(): Unit = {
+    val ctx = TaskContext.get()
+    if (ctx != null && ctx.isInterrupted())
+      throw new TaskKilledException(s"task ${ctx.taskAttemptId()} killed during retries")
+  }
+
+  /** Thread.sleep that, inside a task, wakes up early once the task is
+    * killed (checked every 100 ms), so a kill without an interrupt does
+    * not wait out a 64 s backoff; the caller's next check then throws. */
+  private def sleepUnlessKilled(ms: Long): Unit = {
+    val ctx = TaskContext.get()
+    if (ctx == null) Thread.sleep(ms)
+    else {
+      val end = System.nanoTime() + ms * 1000000L
+      var left = ms
+      while (left > 0 && !ctx.isInterrupted()) {
+        Thread.sleep(math.min(left, 100L))
+        left = (end - System.nanoTime()) / 1000000L
+      }
+    }
+  }
 
   /** 2^n-seconds backoff hook (n = remaining tries, as in the reference),
     * capped so a full 7-try budget can't sleep past `capMs` per wait.
@@ -56,7 +87,7 @@ object Retry {
     * past n=53, and min(negative, cap) would hand Thread.sleep a
     * negative duration — an IllegalArgumentException thrown from inside
     * the retry hook, aborting every remaining retry on large budgets. */
-  def expBackoff(sleeper: Long => Unit = Thread.sleep, capMs: Long = 64000L): (Throwable, Int) => Unit =
+  def expBackoff(sleeper: Long => Unit = sleepUnlessKilled, capMs: Long = 64000L): (Throwable, Int) => Unit =
     (_, n) => sleeper(
       if (n >= 20) capMs
       else math.min(math.pow(2, n).toLong * 1000L, capMs))

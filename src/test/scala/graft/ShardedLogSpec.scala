@@ -182,6 +182,25 @@ class ShardedLogSpec extends SparkSpec {
     assert(fastRetries === 0, "client error must not retry")
   }
 
+  test("read-path taxonomy: an undecodable .rec fails within 1 s and is never retried") {
+    val root = tmpRoot()
+    val dir = Files.createDirectories(root.resolve("a"))
+    val bad = dir.resolve("00000001.rec")
+    Files.write(bad, Array(0xFF.toByte))
+    var retries = 0
+    intercept[java.nio.charset.CharacterCodingException] {
+      ShardedLog.readRecLines(bad, onError = (_, _) => retries += 1)
+    }
+    assert(retries === 0, "a coding error is permanent: it must not retry")
+    // the reader's default path, real 2^n s backoff
+    val t0 = System.nanoTime()
+    intercept[java.nio.charset.CharacterCodingException] {
+      new graft.streaming.FileShardReader(root.toString).read("a", 0L, 1L).toList
+    }
+    val ms = (System.nanoTime() - t0) / 1000000
+    assert(ms < 1000, s"took $ms ms")
+  }
+
   test("resume: a restarted query continues from the committed per-shard offset") {
     val root = tmpRoot()
     val ckpt = Files.createTempDirectory("ckpt").toString

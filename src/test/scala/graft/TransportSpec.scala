@@ -1,7 +1,8 @@
 package graft
 
-import graft.streaming.{BatchingSink, InMemoryTransport, ShardedLog, ToRecord, TransportRegistry}
-import java.nio.file.Files
+import graft.streaming.{BatchingSink, FileRecordWriter, FileShardReader, InMemoryTransport, ShardedLog,
+  ToRecord, TransportRegistry}
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.DataFrame
 
 /** Seam-specific extras on top of the TransportConformance kit (which
@@ -63,7 +64,6 @@ class TransportSpec extends SparkSpec {
   }
 
   test("FileRecordWriter: concurrent writers never replace each other's flushes") {
-    import graft.streaming.{FileRecordWriter, FileShardReader}
     val root = Files.createTempDirectory("fw-conc")
     val w = new FileRecordWriter(root.toString, numShards = 1)
     // 4 sink instances (one per partition in a real job) hammer one
@@ -89,7 +89,6 @@ class TransportSpec extends SparkSpec {
     // streams raw ByteBuffers, KinesisSource.scala:68-70): a flush that
     // is not newline-free UTF-8 falls back to the length-prefixed
     // `.recb` layout and must round-trip the exact bytes.
-    import graft.streaming.{FileRecordWriter, FileShardReader}
     val root = Files.createTempDirectory("fw-bin")
     val w = new FileRecordWriter(root.toString, numShards = 1)
     val payloads = Seq(
@@ -103,6 +102,71 @@ class TransportSpec extends SparkSpec {
       assert(got.map(_.toSeq).sorted(Ordering.Implicits.seqOrdering[Seq, Byte]) ===
         payloads.map(_.toSeq).sorted(Ordering.Implicits.seqOrdering[Seq, Byte]))
     } finally TransportRegistry.unregister(id)
+  }
+
+  /** (shard, seq, payload) of every record under a file-transport root,
+    * read back through the streaming source, in (shard, seq) order. */
+  private def drainFiles(root: Path): Seq[(String, Long, Seq[Byte])] = {
+    val id = freshId()
+    TransportRegistry.register(id, new FileShardReader(root.toString))
+    try drain(id).select("shard", "seq", "value_bin").collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq))
+      .sortBy(r => (r._1, r._2))
+    finally TransportRegistry.unregister(id)
+  }
+
+  private def recordFiles(dir: Path): Seq[String] = {
+    val s = Files.list(dir)
+    try s.toArray.map(_.asInstanceOf[Path].getFileName.toString)
+      .filter(_.startsWith("0")).sorted.toSeq
+    finally s.close()
+  }
+
+  private def put(w: FileRecordWriter, payload: String): Unit =
+    w.putRecords(Seq(("k", payload.getBytes("UTF-8"))))
+
+  test("FileRecordWriter cursor: an external append at the next sequence is kept") {
+    val root = Files.createTempDirectory("fw-ext")
+    val w = new FileRecordWriter(root.toString, numShards = 1)
+    put(w, "a")
+    ShardedLog.append(root, "shard-0", 2, Seq("external"))
+    put(w, "b")
+    assert(recordFiles(root.resolve("shard-0")) ===
+      Seq("00000001.rec", "00000002.rec", "00000003.rec"))
+    assert(drainFiles(root) === Seq("a", "external", "b").zipWithIndex.map {
+      case (v, i) => ("shard-0", i + 1L, v.getBytes("UTF-8").toSeq) })
+  }
+
+  test("FileRecordWriter cursor: a shard directory deleted between puts restarts at 00000001") {
+    val root = Files.createTempDirectory("fw-del")
+    val w = new FileRecordWriter(root.toString, numShards = 1)
+    put(w, "a"); put(w, "b")
+    graft.util.TempDirs.delete(root.resolve("shard-0").toString)
+    put(w, "c")
+    assert(recordFiles(root.resolve("shard-0")) === Seq("00000001.rec"))
+    assert(drainFiles(root) === Seq(("shard-0", 1L, "c".getBytes("UTF-8").toSeq)))
+  }
+
+  test("FileRecordWriter cursor: text and binary flushes share one sequence space") {
+    val root = Files.createTempDirectory("fw-alt")
+    val w = new FileRecordWriter(root.toString, numShards = 1)
+    val payloads = (1 to 6).map(i =>
+      if (i % 2 == 0) Array[Byte](-1, i.toByte) else s"text-$i".getBytes("UTF-8"))
+    payloads.foreach(p => w.putRecords(Seq(("k", p))))
+    assert(recordFiles(root.resolve("shard-0")) === (1 to 6).map(i =>
+      f"$i%08d" + (if (i % 2 == 0) ".recb" else ".rec")))
+    assert(drainFiles(root) === payloads.zipWithIndex.map {
+      case (p, i) => ("shard-0", i + 1L, p.toSeq) })
+  }
+
+  test("FileRecordWriter cursor: two writer instances on one root never replace a flush") {
+    val root = Files.createTempDirectory("fw-two")
+    val w1 = new FileRecordWriter(root.toString, numShards = 1)
+    val w2 = new FileRecordWriter(root.toString, numShards = 1)
+    (1 to 6).foreach(i => put(if (i % 2 == 1) w1 else w2, s"r$i"))
+    assert(recordFiles(root.resolve("shard-0")) === (1 to 6).map(i => f"$i%08d.rec"))
+    assert(drainFiles(root) === (1 to 6).map(i =>
+      ("shard-0", i.toLong, s"r$i".getBytes("UTF-8").toSeq)))
   }
 
   test("unregistered transport name fails fast with a clear error") {
